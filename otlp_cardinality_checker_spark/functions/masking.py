@@ -40,6 +40,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import jvm_cached
+
 # ---------------------------------------------------------------------------
 # Mask pattern table — ONE definition, compiled for both engines.
 # `regex` must be valid for BOTH java.util.regex and Python `re`.
@@ -519,8 +521,25 @@ def masked_frame(
     (0 rows). User YAML tables get the UNGUARDED chain — an arbitrary
     replacement literal may introduce a later guard substring, and the
     pandas engine (evolving-string guards) would then disagree.
+
+    The level Columns are a pure function of ``(src, out, patterns)``,
+    so they are built once per JVM (``session.jvm_cached``); each call
+    still stacks them onto ``df`` with one ``withColumn`` per level.
     """
     pats = patterns or MASK_PATTERNS
+    cur = df
+    for rep in jvm_cached(
+        ("masked_frame", src, out, pats), lambda: _mask_levels(src, out, pats)
+    ):
+        cur = cur.withColumn(out, rep)
+    return cur
+
+
+def _mask_levels(
+    src: str, out: str, pats: tuple[MaskPattern, ...]
+) -> tuple[Column, ...]:
+    """The Columns :func:`masked_frame` assigns to ``out`` in turn: the
+    coalesced leaf, then one Column per level."""
     guarded = pats == MASK_PATTERNS
     leaf = F.coalesce(F.col(src), F.lit(""))
 
@@ -552,7 +571,7 @@ def masked_frame(
             else:
                 levels.append([g, [p], []])
 
-    cur = df.withColumn(out, leaf)
+    cols = [leaf]
     for g, inside, post in levels:
         rep = F.col(out)
         for p in inside:
@@ -563,8 +582,8 @@ def masked_frame(
             )
         for p in post:
             rep = F.regexp_replace(rep, F.lit(_j(p.regex)), F.lit(p.repl))
-        cur = cur.withColumn(out, rep)
-    return cur
+        cols.append(rep)
+    return tuple(cols)
 
 
 def with_template(

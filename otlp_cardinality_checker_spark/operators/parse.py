@@ -24,12 +24,13 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.attributes import ATTRIBUTE_KEYS, attrs_frame, attrs_map_expr
 from ..functions.masking import masked_frame, template_from_masked, template_series
 from ..functions.severity import severity_expr, severity_series
+from ..session import jvm_cached
 
 INVALID_UTF8_MARKER = "�"
 
@@ -60,11 +61,16 @@ def _parse_sql(df: DataFrame, patterns=None) -> DataFrame:
     # pattern skips — row-identical to template_expr's inline chain but
     # ~35% cheaper on the mask passes (see masking.masked_frame docstring;
     # OPTIMIZATION_r06.md has the measurements).
-    text = F.col("text")
-    base = df.columns
     masked = masked_frame(df, src="text", out="__masked", patterns=patterns)
-    return masked.select(
-        *base,
+    return masked.select(*df.columns, *jvm_cached("parse_sql", _parsed_columns))
+
+
+def _parsed_columns() -> tuple[Column, ...]:
+    """The PARSED_COLUMNS projection over ``text`` and ``__masked``. A
+    pure Column tree, built once per JVM: each of its ~1,800 nodes costs
+    one Py4J round trip to build."""
+    text = F.col("text")
+    return (
         severity_expr(text).alias("severity_inferred"),
         template_from_masked(F.col("__masked")).alias("template"),
         attrs_map_expr(text).alias("attrs"),

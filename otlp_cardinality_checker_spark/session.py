@@ -8,8 +8,12 @@ shuffle parallelism, Arrow transfers on, UTC session time.
 from __future__ import annotations
 
 import os
+from typing import Callable, Hashable, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def default_parallelism() -> int:
@@ -48,3 +52,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_JVM_CACHE: dict = {}
+
+
+def jvm_cached(key: Hashable, build: Callable[[], T]) -> T:
+    """``build()``, built once per JVM and reused for the JVM's life.
+
+    For values that are a pure function of ``key`` while one JVM runs:
+    Column expression trees (every node of one costs a Py4J round trip
+    to build) and facts such as the classpath. Never for data: a cached
+    Column is an unresolved expression, so every plan that uses it still
+    scans its input. Each entry remembers the Py4J gateway it was built
+    on and is rebuilt when the gateway changes. No lock: two threads
+    racing to fill one key build identical values, and either may win.
+    """
+    gateway = SparkContext._gateway
+    hit = _JVM_CACHE.get(key)
+    if hit is not None and hit[0] is gateway:
+        return hit[1]
+    value = build()
+    _JVM_CACHE[key] = (gateway, value)
+    return value

@@ -3,9 +3,18 @@
 The production target is an Iceberg table (north rule); this container has
 no Iceberg runtime jar, so the loader gates on catalog availability and
 falls back to the deterministic parquet fixtures written by ``datagen``.
-Both paths yield the exact `input_hint` schema:
-``conv_id string, turn_idx int, role string, text string, tool string,
-ts timestamp``.
+Both paths yield the `input_hint` columns ``conv_id string, turn_idx int,
+role string, text string, tool string, ts``.
+
+The parquet reads declare their schemas (``TRANSCRIPTS_SCHEMA``,
+``ROLE_DIM_SCHEMA``, ``TOOL_DIM_SCHEMA``), so building a DataFrame over
+them submits no schema-inference job. Each equals what Spark infers from
+the files ``datagen`` writes, which a test pins. pyarrow writes ``ts``
+with isAdjustedToUTC=false, so Spark reads it as ``timestamp_ntz``; the
+streaming source's ``TRANSCRIPT_SCHEMA`` says ``ts timestamp``, a
+different type, and must not be reused here. Whether Iceberg is on the
+classpath is probed once per JVM, since the classpath cannot change while
+the JVM runs.
 """
 
 from __future__ import annotations
@@ -16,16 +25,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F, SparkSession
 
 from ..datagen import ensure_dataset
+from ..session import jvm_cached
+
+TRANSCRIPTS_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp_ntz"
+)
+ROLE_DIM_SCHEMA = "role string, role_class string, severity_default string"
+TOOL_DIM_SCHEMA = "tool string, tool_family string, is_privileged boolean"
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
+    def probe() -> bool:
+        try:
+            spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
+                "org.apache.iceberg.spark.SparkCatalog"
+            )
+            return True
+        except Exception:
+            return False
+
+    return jvm_cached("iceberg_available", probe)
 
 
 def load_transcripts(
@@ -41,14 +61,16 @@ def load_transcripts(
             return spark.read.format("iceberg").load(table)
         except Exception:
             pass
-    return spark.read.parquet(str(data_dir / "transcripts.parquet"))
+    return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(
+        str(data_dir / "transcripts.parquet")
+    )
 
 
 def load_dims(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     data_dir = ensure_dataset(sf_dir)
     return (
-        spark.read.parquet(str(data_dir / "role_dim.parquet")),
-        spark.read.parquet(str(data_dir / "tool_dim.parquet")),
+        spark.read.schema(ROLE_DIM_SCHEMA).parquet(str(data_dir / "role_dim.parquet")),
+        spark.read.schema(TOOL_DIM_SCHEMA).parquet(str(data_dir / "tool_dim.parquet")),
     )
 
 

@@ -38,6 +38,36 @@ TRANSCRIPT_SCHEMA = (
     "tool string, ts timestamp"
 )
 
+# seconds an availableNow query may run before it counts as hung
+STREAM_TIMEOUT_S = 300
+
+
+def _await_drained(query, stop_when=None) -> None:
+    """Block until an ``availableNow`` query has drained its source.
+
+    ``stop_when``, polled every 0.2 s, stops the query early (a simulated
+    kill). A query still running after ``STREAM_TIMEOUT_S`` is stopped and
+    raises ``TimeoutError``: returning instead would leave the sinks with
+    a partial history that the ``current_*`` readers merge as if it were
+    complete. A query that failed re-raises its exception.
+    """
+    deadline = time.monotonic() + STREAM_TIMEOUT_S
+    poll = STREAM_TIMEOUT_S if stop_when is None else 0.2
+    while True:
+        if stop_when is not None and stop_when():
+            query.stop()
+            return
+        left = deadline - time.monotonic()
+        if left <= 0:
+            break
+        if query.awaitTermination(max(min(poll, left), 0.001)):
+            return
+    query.stop()
+    raise TimeoutError(
+        f"streaming query {query.id} still running after "
+        f"{STREAM_TIMEOUT_S} s; stopped it"
+    )
+
 
 def _process_batch(
     batch_df: DataFrame,
@@ -182,15 +212,12 @@ def run_stream(
         .start()
     )
     try:
-        while query.isActive:
-            if (
-                stop_after_batches is not None
-                and executed["n"] >= stop_after_batches
-            ):
-                query.stop()
-                break
-            time.sleep(0.2)
-        query.awaitTermination(300)
+        _await_drained(
+            query,
+            stop_when=None
+            if stop_after_batches is None
+            else lambda: executed["n"] >= stop_after_batches,
+        )
     finally:
         # engine-reported per-micro-batch metrics (input rows, rows/sec,
         # per-stage durations) persisted next to the lineage table — the
@@ -470,7 +497,7 @@ def sessionize_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
 
 
 DOC_SCHEMA = (
@@ -573,7 +600,7 @@ def dedup_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return executed["n"]
 
 
@@ -652,7 +679,7 @@ def run_windowed_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
 
 
 def run_stream_stream_join(
@@ -735,7 +762,7 @@ def run_stream_stream_join(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_drained(q)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
@@ -799,7 +826,7 @@ def quantile_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return executed["n"]
 
 
@@ -865,7 +892,7 @@ def cms_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return executed["n"]
 
 
@@ -936,7 +963,7 @@ def loop_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return executed["n"]
 
 
@@ -1110,7 +1137,7 @@ def card_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return executed["n"]
 
 
@@ -1194,7 +1221,7 @@ def markers_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return executed["n"]
 
 
@@ -1275,7 +1302,7 @@ def cusum_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return executed["n"]
 
 
@@ -1349,7 +1376,7 @@ def trending_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drained(q)
     return executed["n"]
 
 

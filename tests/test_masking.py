@@ -390,3 +390,131 @@ def test_template_series_duplicate_index_labels():
     got = template_series(s)
     assert list(got.index) == [0, 1, 0]
     assert got.tolist() == [template_of(x) for x in s.tolist()]
+
+
+def _count_py4j_calls(monkeypatch):
+    """Count Python-to-JVM round trips, leaving out the object releases
+    that Python's garbage collector sends at arbitrary times."""
+    from py4j import protocol
+    from pyspark import SparkContext
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    client = SparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = {"n": 0}
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(release):
+            calls["n"] += 1
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return calls
+
+
+def test_jvm_cached_rebuilds_on_new_gateway(monkeypatch):
+    """One build per key while the gateway stays; a new gateway (a new
+    JVM) gets a fresh value."""
+    from pyspark import SparkContext
+
+    from otlp_cardinality_checker_spark import session
+
+    monkeypatch.setattr(session, "_JVM_CACHE", {})
+    builds = []
+
+    def build():
+        builds.append(object())
+        return builds[-1]
+
+    first = session.jvm_cached("k", build)
+    assert session.jvm_cached("k", build) is first
+    assert session.jvm_cached("other", build) is not first
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    fresh = session.jvm_cached("k", build)
+    assert fresh is not first
+    assert session.jvm_cached("k", build) is fresh
+    assert len(builds) == 3
+
+
+def test_parse_columns_built_once_per_jvm(spark, tmp_path, monkeypatch):
+    """A second parse_turns / masked_frame build reuses the cached
+    Columns and makes almost no JVM calls; a user YAML table gets fresh
+    Columns (a new gateway: test_jvm_cached_rebuilds_on_new_gateway);
+    templates stay equal to the scalar template_of goldens, cold and
+    warm."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from otlp_cardinality_checker_spark import session
+    from otlp_cardinality_checker_spark.functions import masking
+    from otlp_cardinality_checker_spark.operators import parse
+
+    monkeypatch.setattr(session, "_JVM_CACHE", {})
+    built = {"levels": 0, "columns": 0}
+
+    def counted(name, fn):
+        def wrapper(*args):
+            built[name] += 1
+            return fn(*args)
+
+        return wrapper
+
+    monkeypatch.setattr(
+        masking, "_mask_levels", counted("levels", masking._mask_levels)
+    )
+    monkeypatch.setattr(
+        parse, "_parsed_columns", counted("columns", parse._parsed_columns)
+    )
+    cases = [t for t, _ in GOLDEN_TEMPLATES]
+    df = spark.createDataFrame(
+        pd.DataFrame({"i": range(len(cases)), "text": cases})
+    )
+
+    def templates(frame):
+        return [r["template"] for r in frame.orderBy("i").collect()]
+
+    calls = _count_py4j_calls(monkeypatch)
+    cold = parse.parse_turns(df)
+    cold_calls = calls["n"]
+    calls["n"] = 0
+    warm = parse.parse_turns(df)
+    warm_calls = calls["n"]
+    assert built == {"levels": 1, "columns": 1}
+    # a cold build crosses to the JVM once per Column node (~1,800);
+    # a warm one only stacks the cached levels and selects
+    assert warm_calls * 10 < cold_calls, (warm_calls, cold_calls)
+    expected = [template_of(t) for t in cases]
+    assert templates(cold) == templates(warm) == expected
+
+    masking.masked_frame(df, src="text", out="m")
+    masking.masked_frame(df, src="text", out="m")
+    assert built["levels"] == 2  # new (src, out): one new entry
+
+    yml = tmp_path / "user_patterns.yaml"
+    yml.write_text(
+        """
+patterns:
+  - name: intro
+    regex: 'hello'
+    placeholder: 'Q:'
+  - name: uses
+    regex: 'Q:[0-9]+'
+    placeholder: '<Q>'
+    required_substring: 'Q:'
+"""
+    )
+    user = spark.createDataFrame(pd.DataFrame({"text": ["hello123", "Q:55"]}))
+    for _ in range(2):
+        # each load is a new tuple; an equal table reuses the entry
+        pats = masking.load_patterns_yaml(str(yml))
+        got = (
+            masking.masked_frame(user, src="text", out="m", patterns=pats)
+            .withColumn("m_col", masking.mask_expr(F.col("text"), pats))
+            .collect()
+        )
+        # unguarded: 'uses' fires on the 'Q:' that 'intro' introduced
+        assert [r["m"] for r in got] == [r["m_col"] for r in got] == [
+            "<Q>",
+            "<Q>",
+        ]
+    assert built["levels"] == 3

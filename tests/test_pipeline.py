@@ -275,3 +275,53 @@ def test_export_sorted_ranges_are_disjoint(spark, tiny_routed, tmp_path):
     spans.sort()
     for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
         assert hi1 <= lo2  # disjoint (boundary keys may touch)
+
+
+SF = "/root/testdata/sf0.001"
+
+
+def test_declared_source_schemas_equal_inferred(spark):
+    """The schemas the loaders declare are exactly what Spark infers from
+    the files ensure_dataset writes (``ts`` is timestamp_ntz: pyarrow
+    writes it with isAdjustedToUTC=false)."""
+    from otlp_cardinality_checker_spark.datagen import ensure_dataset
+    from otlp_cardinality_checker_spark.sources.transcripts import (
+        ROLE_DIM_SCHEMA,
+        TOOL_DIM_SCHEMA,
+        TRANSCRIPTS_SCHEMA,
+        load_dims,
+        load_transcripts,
+    )
+
+    data_dir = ensure_dataset(SF)
+    role_dim, tool_dim = load_dims(spark, SF)
+    for name, ddl, loaded in (
+        ("transcripts", TRANSCRIPTS_SCHEMA, load_transcripts(spark, SF)),
+        ("role_dim", ROLE_DIM_SCHEMA, role_dim),
+        ("tool_dim", TOOL_DIM_SCHEMA, tool_dim),
+    ):
+        path = str(data_dir / f"{name}.parquet")
+        inferred = spark.read.parquet(path).schema
+        assert spark.read.schema(ddl).parquet(path).schema == inferred, name
+        assert loaded.schema == inferred, name
+
+
+def test_routed_turns_build_submits_no_jobs(spark):
+    """Building the routed DataFrame runs no Spark job (no schema
+    inference, no eager action); the first action does."""
+    from otlp_cardinality_checker_spark.plans.pipeline import routed_turns
+
+    routed_turns(spark, SF)  # writes the dataset if it is missing
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("routed_build", "build routed_turns")
+    try:
+        routed = routed_turns(spark, SF)
+        build_jobs = list(tracker.getJobIdsForGroup("routed_build"))
+        routed.limit(1).collect()
+        action_jobs = list(tracker.getJobIdsForGroup("routed_build"))
+    finally:
+        for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{key}", None)
+    assert build_jobs == []
+    assert action_jobs  # the counter sees this group's jobs

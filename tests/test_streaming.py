@@ -567,3 +567,25 @@ def test_trending_stream_equals_batch_and_replay_safe(spark, tmp_path):
         tuple(r) for r in current_trending(spark, str(tmp_path / "out")).collect()
     )
     assert replayed == streamed
+
+
+def test_stream_timeout_stops_query_and_raises(spark, monkeypatch):
+    """A stream that outlives STREAM_TIMEOUT_S is stopped and raises
+    TimeoutError instead of returning with partial state."""
+    from otlp_cardinality_checker_spark.streaming import stream
+
+    monkeypatch.setattr(stream, "STREAM_TIMEOUT_S", 1)
+    # a rate source never drains, so only the timeout can end the wait
+    q = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", 1)
+        .load()
+        .writeStream.format("noop")
+        .start()
+    )
+    try:
+        with pytest.raises(TimeoutError):
+            stream._await_drained(q)
+        assert not q.isActive
+    finally:
+        q.stop()
